@@ -36,6 +36,8 @@ import pandas as pd
 
 from .. import vocab as V
 from ..langpacks import FR_CLITICS, LANG_PACKS
+from .ner_tags import decode_from_bioes
+from .triples import DEFAULT_PATTERN
 
 TOKEN_PAT = re.compile(V.TOKEN_RE)
 WORD_PAT = re.compile(V.WORD_RE + r"\Z")
@@ -809,8 +811,8 @@ def annotate_sentences(text: str, pretokenized: bool = False,
     """Full per-sentence annotation: yields
     (sent_id, sent_start, sent_end, words) with words = the annotated
     dicts (token_id/is_mwt/text/start/end/upos/xpos/feats/lemma/head/
-    deprel/ner) — the shared core of annotate_page and the CoNLL-U
-    renderer.
+    deprel/ner) — the shared core of annotate_page, page_triples and the
+    CoNLL-U renderer.
 
     ``decoder='mst'`` swaps the fixed NER/depparse grammars for the
     general decode kernels (operators.decode: single-root Chu-Liu/Edmonds
@@ -828,16 +830,6 @@ def annotate_sentences(text: str, pretokenized: bool = False,
     Tokens longer than ``max_token_len`` are replaced with ``<UNK>``
     before downstream tagging, the reference's GPU-memory guard
     (tokenize_processor.py:113-117); offsets keep the original span."""
-    procs = None if processors is None else frozenset(processors)
-
-    def has(p):
-        return procs is None or p in procs
-
-    if decoder == "mst":
-        from .decode import parse_sentence_mst, tag_ner_viterbi
-        parse_fn, ner_fn = parse_sentence_mst, tag_ner_viterbi
-    else:
-        parse_fn, ner_fn = parse_sentence, tag_ner
     if variant is not None:
         splitter = TOKENIZER_VARIANTS[variant]
     elif pretokenized:
@@ -849,41 +841,57 @@ def annotate_sentences(text: str, pretokenized: bool = False,
         splitter = pack_splitter(lang)
     else:
         splitter = split_sentences
-    tag = has("pos") or has("lemma")
+    mwt = processors is None or "mwt" in processors
     for sent_id, (s_start, s_end, toks) in enumerate(splitter(text)):
         words = []
         for t_i, (tok, a, b) in enumerate(toks):
             if len(tok) > max_token_len:
                 tok = TOKEN_TOO_LONG_REPLACEMENT
-            parts = expand_token(tok, lang) if has("mwt") else [tok]
+            parts = expand_token(tok, lang) if mwt else [tok]
             is_mwt = len(parts) > 1
             for p in parts:
-                if tag:
-                    upos, xpos, feats, lemma = tag_word(p, lang)
-                else:
-                    upos = xpos = feats = lemma = None
-                words.append({
-                    "token_id": t_i + 1, "is_mwt": is_mwt, "text": p,
-                    "start": a, "end": b,
-                    "upos": upos if has("pos") else None,
-                    "xpos": xpos if has("pos") else None,
-                    "feats": feats if has("pos") else None,
-                    "lemma": lemma if has("lemma") else None,
-                })
-        if has("ner"):
-            tags, _ = ner_fn(words)
-            for w, t in zip(words, tags):
-                w["ner"] = t
-        else:
-            for w in words:
-                w["ner"] = None
-        if has("depparse"):
-            parse_fn(words, lang=lang)
-        else:
-            for w in words:
-                w["head"] = None
-                w["deprel"] = None
-        yield sent_id, s_start, s_end, words
+                words.append({"token_id": t_i + 1, "is_mwt": is_mwt,
+                              "text": p, "start": a, "end": b})
+        yield (sent_id, s_start, s_end,
+               annotate_words(words, lang, processors, decoder))
+
+
+def annotate_words(words, lang: str = "en", processors=None,
+                   decoder: str = "grammar"):
+    """The post-tokenization half of the pipeline over ONE sentence's
+    word dicts (each carrying 'text'), in place: POS + lemma
+    (upos/xpos/feats/lemma), BIOES NER (ner), dependency parse
+    (head/deprel).  ``processors``/``decoder`` as in
+    :func:`annotate_sentences`; a skipped stage leaves its keys None.
+    Shared by annotate_sentences and annotate_from_tokens.  -> words."""
+    pos = processors is None or "pos" in processors
+    lemma = processors is None or "lemma" in processors
+    for w in words:
+        w["upos"], w["xpos"], w["feats"], w["lemma"] = (
+            tag_word(w["text"], lang) if pos or lemma else (None,) * 4)
+        if not pos:
+            w["upos"] = w["xpos"] = w["feats"] = None
+        if not lemma:
+            w["lemma"] = None
+    if decoder == "mst":
+        from .decode import parse_sentence_mst, tag_ner_viterbi
+        parse_fn, ner_fn = parse_sentence_mst, tag_ner_viterbi
+    else:
+        parse_fn, ner_fn = parse_sentence, tag_ner
+    if processors is None or "ner" in processors:
+        tags, _ = ner_fn(words)
+        for w, t in zip(words, tags):
+            w["ner"] = t
+    else:
+        for w in words:
+            w["ner"] = None
+    if processors is None or "depparse" in processors:
+        parse_fn(words, lang=lang)
+    else:
+        for w in words:
+            w["head"] = None
+            w["deprel"] = None
+    return words
 
 
 def annotate_page(url: str, lang: str, text: str,
@@ -949,19 +957,11 @@ def annotate_from_tokens(words_df):
     fixture with sources.conllu.read_conllu, re-annotate its token
     stream.  Grouped per sentence (applyInPandas) because depparse is a
     whole-sentence function."""
-    from pyspark.sql import functions as F
 
     def one_sentence(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("word_id")
-        words = []
-        for t, mwt in zip(pdf["text"], pdf["is_mwt"]):
-            upos, xpos, feats, lemma = tag_word(t)
-            words.append({"text": t, "is_mwt": bool(mwt), "upos": upos,
-                          "xpos": xpos, "feats": feats, "lemma": lemma})
-        tags, _ = tag_ner(words)
-        for w, tag in zip(words, tags):
-            w["ner"] = tag
-        parse_sentence(words)
+        words = annotate_words([{"text": t, "is_mwt": bool(mwt)} for t, mwt
+                                in zip(pdf["text"], pdf["is_mwt"])])
         url = pdf["url"].iloc[0]
         sid = pdf["sent_id"].iloc[0]
         return pd.DataFrame(
@@ -981,85 +981,75 @@ def annotate_from_tokens(words_df):
 
 # ---------------------------------------------------------------------------
 # Narrow-path triple extraction: the whole pages -> triples chain in ONE
-# mapInPandas pass (zero shuffle).  Physically this is the production plan
-# for 100 TB — annotation and pattern-matching are sentence-local, so
-# nothing needs an exchange until the corpus-wide graph aggregate
-# (the reference exploits the same locality in UDProcessor.bulk_process,
-# processor.py:242-260).  Semantics are identical to the relational path
-# (operators.triples SQL joins); parity is asserted in tests and both are
-# gated against the same DuckDB oracle.
+# mapInPandas pass (zero shuffle).  Annotation and pattern matching are
+# sentence-local, so nothing needs an exchange until the corpus-wide graph
+# aggregate (the reference exploits the same locality in
+# UDProcessor.bulk_process, processor.py:242-260).  The pass is a thin
+# composition of the definitions the relational path uses: words come
+# from annotate_sentences (the annotate() kernel, <UNK> guard included),
+# argument types from ner_tags.decode_from_bioes (the state machine
+# mentions.decode_mentions runs relationally), and the rule from
+# triples.DEFAULT_PATTERN (the pattern extract_triples compiles to joins).
+# tests/test_operators_spark.py::test_triples_narrow_matches_words_table
+# pins row-for-row parity with extract_triples(annotate(p)).
 # ---------------------------------------------------------------------------
-
-_TRIPLE_PRIO = {"obj": 1, "xcomp": 2, "obl": 3}
 
 TRIPLES_SCHEMA = ("url string, sent_id int, subj string, pred string, "
                   "obj string, subj_type string, obj_type string")
 
 
-def sentence_triples(words, mentions):
-    """words: annotated dicts (text/upos/lemma/head/deprel, 1-based heads);
-    mentions: (first0, last0, type) 0-based spans from tag_ner.
-    -> list of (subj, pred, obj, subj_type, obj_type)."""
-    flats: dict = {}
-    for i, w in enumerate(words):
-        if w["deprel"] == "flat":
-            flats.setdefault(w["head"], []).append((i + 1, w["text"]))
+def sentence_triples(words):
+    """words: one sentence's annotated dicts (annotate_sentences output,
+    1-based heads) -> [(subj, pred, obj, subj_type, obj_type)] under
+    DEFAULT_PATTERN: per predicate, every subject child x the object child
+    of highest obj_rels priority (ties: word order); argument spans
+    expand over expand_rels children; a span exactly covering a NER
+    mention takes its type."""
+    pat = DEFAULT_PATTERN
+    subjs: dict = {}
+    best_obj: dict = {}
+    expand: dict = {}
+    for i, w in enumerate(words, 1):
+        rel, head = w["deprel"], w["head"]
+        if rel in pat.subj_rels:
+            subjs.setdefault(head, []).append(i)
+        if rel in pat.obj_rels:
+            cand = (pat.obj_rels.index(rel), i)
+            if head not in best_obj or cand < best_obj[head]:
+                best_obj[head] = cand
+        if rel in pat.expand_rels:
+            expand.setdefault(head, []).append(i)
 
     def span(word_id):
-        w = words[word_id - 1]
-        fl = sorted(flats.get(word_id, []))
-        text = " ".join([w["text"]] + [t for _, t in fl])
-        last = fl[-1][0] if fl else word_id
-        return text, last
+        ids = [word_id] + expand.get(word_id, [])
+        return " ".join(words[j - 1]["text"] for j in ids), ids[-1]
 
-    mtype = {(a + 1, b + 1): t for a, b, t in mentions}
+    args = []
+    for v, wv in enumerate(words, 1):
+        if wv["upos"] in pat.pred_upos and v in subjs and v in best_obj:
+            o_id = best_obj[v][1]
+            args.extend((wv[pat.pred_from], s_id, o_id) for s_id in subjs[v])
+    if not args:
+        return []
+    mtype = {(m["start"] + 1, m["end"] + 1): m["type"]
+             for m in decode_from_bioes([w["ner"] for w in words])}
     out = []
-    for v in range(1, len(words) + 1):
-        if words[v - 1]["upos"] != "VERB":
-            continue
-        subjs = [i + 1 for i, w in enumerate(words)
-                 if w["head"] == v and w["deprel"] in ("nsubj", "nsubj:pass")]
-        objs = sorted((_TRIPLE_PRIO[w["deprel"]], i + 1)
-                      for i, w in enumerate(words)
-                      if w["head"] == v and w["deprel"] in _TRIPLE_PRIO)
-        if not subjs or not objs:
-            continue
-        o_id = objs[0][1]
-        obj_text, o_last = span(o_id)
-        for s_id in subjs:
-            subj_text, s_last = span(s_id)
-            out.append((subj_text, words[v - 1]["lemma"], obj_text,
-                        mtype.get((s_id, s_last)), mtype.get((o_id, o_last))))
+    for pred, s_id, o_id in args:
+        subj, s_last = span(s_id)
+        obj, o_last = span(o_id)
+        out.append((subj, pred, obj, mtype.get((s_id, s_last)),
+                    mtype.get((o_id, o_last))))
     return out
 
 
 def page_triples(url: str, lang: str, text: str, decoder: str = "grammar"):
     """-> list of triple rows for one page (TRIPLES_SCHEMA order).
-
-    ``decoder='mst'`` swaps the fixed grammars for the general decode
-    kernels (operators.decode): Chu-Liu/Edmonds single-root MST over the
-    grammar-derived arc scores for depparse, Viterbi over the gazetteer
-    emissions for NER — byte-identical output on in-grammar sentences
-    (gate kg_triples_mst shares kg_triples' oracle), valid trees/tag
-    sequences on sentences the grammar degrades on."""
-    if decoder == "mst":
-        from .decode import parse_sentence_mst, tag_ner_viterbi
-        parse_fn, ner_fn = parse_sentence_mst, tag_ner_viterbi
-    else:
-        parse_fn, ner_fn = parse_sentence, tag_ner
-    rows = []
-    for sent_id, (_a, _b, toks) in enumerate(split_sentences(text)):
-        words = []
-        for t_i, (tok, a, b) in enumerate(toks):
-            for p in expand_token(tok):
-                upos, xpos, feats, lemma = tag_word(p)
-                words.append({"text": p, "upos": upos, "xpos": xpos,
-                              "lemma": lemma})
-        _tags, mentions = ner_fn(words)
-        parse_fn(words)
-        for subj, pred, obj, st, ot in sentence_triples(words, mentions):
-            rows.append((url, sent_id, subj, pred, obj, st, ot))
-    return rows
+    ``decoder='mst'`` annotates with the general decode kernels
+    (operators.decode) — see :func:`annotate_sentences`."""
+    return [(url, sent_id, *t)
+            for sent_id, _a, _b, words in annotate_sentences(
+                text, lang=lang, decoder=decoder)
+            for t in sentence_triples(words)]
 
 
 def _make_triples_batches(decoder: str):
@@ -1072,10 +1062,6 @@ def _make_triples_batches(decoder: str):
                 out.extend(page_triples(url, lang, text, decoder=decoder))
             yield pd.DataFrame(out, columns=cols)
     return _batches
-
-
-def _triples_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    yield from _make_triples_batches("grammar")(batches)
 
 
 def triples_narrow(pages_df, en_only: bool = True, decoder: str = "grammar"):

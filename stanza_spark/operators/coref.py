@@ -23,12 +23,11 @@ on url, which the annotate stage's output partitioning already provides.
 
 from __future__ import annotations
 
-import json
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from ..pkgdata import load_json
 
 PRONOUNS = {"he", "she", "it", "they"}
 
@@ -44,10 +43,7 @@ PRONOUNS = {"he", "she", "it", "they"}
 # pure recency gets wrong whenever a female person intervenes.
 # ---------------------------------------------------------------------------
 
-_CW_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "coref_weights.json")
-with open(_CW_PATH) as _f:
-    _CW = json.load(_f)["weights"]
+_CW = load_json("coref_weights.json")["weights"]
 
 
 def entity_gender(entity_id: str | None) -> str | None:

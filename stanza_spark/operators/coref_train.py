@@ -43,10 +43,11 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from ..pkgdata import resource_path
+
 ALPHA = 0.5
 
-WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "coref_weights.json")
+WEIGHTS_PATH = resource_path("coref_weights.json")
 
 # ---------------------------------------------------------------------------
 # The committed pair treebank: (pronoun, candidate_gender,

@@ -27,8 +27,6 @@ production.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Iterator
 
 import numpy as np
@@ -36,6 +34,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from ..pkgdata import load_json
 from .decode import mst_single_root, viterbi_decode
 
 # ---------------------------------------------------------------------------
@@ -50,10 +49,7 @@ from .decode import mst_single_root, viterbi_decode
 # transition context, the behavior a per-token argmax cannot reproduce.
 # ---------------------------------------------------------------------------
 
-_WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "learned_weights.json")
-with open(_WEIGHTS_PATH) as _f:
-    _MODEL = json.load(_f)
+_MODEL = load_json("learned_weights.json")
 
 TAGS = tuple(_MODEL["tags"])
 _T = {t: i for i, t in enumerate(TAGS)}

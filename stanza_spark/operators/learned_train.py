@@ -46,6 +46,8 @@ import os
 
 from pyspark.sql import SparkSession, functions as F
 
+from ..pkgdata import resource_path
+
 #: the full UD v2 UPOS inventory — the trained tag space (17 >= 15)
 TAGS = ("ADJ", "ADP", "ADV", "AUX", "CCONJ", "DET", "INTJ", "NOUN", "NUM",
         "PART", "PRON", "PROPN", "PUNCT", "SCONJ", "SYM", "VERB", "X")
@@ -58,8 +60,7 @@ DIST_DECAY = 0.35    # per extra token of arc distance (hyperparameter)
 #: only multiplies every count by the same replication factor)
 SF_TRAIN = "/root/testdata/sf0.001"
 
-WEIGHTS_PATH = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "resources", "learned_weights.json")
+WEIGHTS_PATH = resource_path("learned_weights.json")
 
 # ---------------------------------------------------------------------------
 # The committed supplement: (tokens, tags, heads) gold analyses covering

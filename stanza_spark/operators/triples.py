@@ -31,31 +31,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 
-def _parse_head_attrs(attrs: str):
-    """Shared head-node attribute parser for the two Semgrex compilers
-    (``DepPattern.from_semgrex`` and :func:`match_dep_pattern`):
-    ``upos:A|B`` and ``lemma:/re/`` are supported; ANY leftover attribute
-    text raises — unsupported Semgrex syntax must fail loudly, never be
-    silently ignored.  -> (upos tuple | None, lemma regex | None)."""
-    import re as _re
-
-    upos = lemma_re = None
-    rest = attrs
-    m = _re.search(r"upos:([\w|]+)", attrs)
-    if m:
-        upos = tuple(m.group(1).split("|"))
-        rest = rest.replace(m.group(0), "", 1)
-    m = _re.search(r"lemma:/((?:[^/\\]|\\.)*)/", attrs)
-    if m:
-        lemma_re = m.group(1)
-        rest = rest.replace(m.group(0), "", 1)
-    if rest.strip(" ,"):
-        raise ValueError(
-            f"semgrex: unsupported head attributes {rest.strip(' ,')!r} "
-            "(supported: upos:..., lemma:/.../)")
-    return upos, lemma_re
-
-
 @dataclass(frozen=True)
 class DepPattern:
     """Declarative dependency-pattern spec — the Semgrex-analog surface.

@@ -8,7 +8,7 @@ import json
 import pandas as pd
 import pytest
 
-from stanza_spark.operators.coref import (_CW_PATH, _best_antecedent,
+from stanza_spark.operators.coref import (_best_antecedent,
                                           _resolve_pronouns_doc,
                                           entity_gender, pair_score)
 from stanza_spark.operators.coref_train import pair_features
@@ -18,8 +18,8 @@ from stanza_spark import vocab as V
 def test_trained_weights_reproduce_committed_artifact(spark):
     """The committed JSON is the Spark job's exact output, not
     hand-tuned constants (same discipline as learned_train)."""
-    from stanza_spark.operators.coref_train import train_weights
-    with open(_CW_PATH) as f:
+    from stanza_spark.operators.coref_train import WEIGHTS_PATH, train_weights
+    with open(WEIGHTS_PATH) as f:
         committed = json.load(f)
     assert train_weights(spark) == committed
 

@@ -69,6 +69,34 @@ def test_triples_on_reference_golden(spark):
     ]
 
 
+def test_triples_narrow_matches_words_table(spark):
+    """The narrow Arrow triple pass and the words-table path
+    (extract_triples over annotate + decode_mentions) apply ONE rule:
+    identical rows, argument types included, on the corpus and on pages
+    it never produces — a token past MAX_TOKEN_LEN_DEFAULT (both paths
+    see <UNK>), empty text, whitespace-only text."""
+    from collections import Counter
+    from stanza_spark.operators.annotate import (MAX_TOKEN_LEN_DEFAULT,
+                                                 triples_narrow)
+    cols = ["url", "sent_id", "subj", "pred", "obj", "subj_type",
+            "obj_type"]
+    long_tok = "X" + "a" * (MAX_TOKEN_LEN_DEFAULT + 200)
+    hand = spark.createDataFrame(
+        [("long", "en", f"{long_tok} attended Harvard in 1999."),
+         ("empty", "en", ""),
+         ("blank", "en", " \n\n\t  \n")],
+        "url string, lang string, text string")
+    corpus = pages(spark, SF_SMOKE, with_html=False)
+    for p in (corpus, hand):
+        w = annotate(p)
+        want = Counter(map(tuple, extract_triples(w, decode_mentions(w))
+                           .select(*cols).collect()))
+        got = Counter(map(tuple, triples_narrow(p).select(*cols).collect()))
+        assert want and got == want
+    assert set(want) == {("long", 0, "<UNK>", "attend", "Harvard", None,
+                          "ORG")}
+
+
 def test_linking_and_anti_join(spark):
     doc = "Obama attended Harvard. Zorbly Qux visited Paris."
     df = spark.createDataFrame([("u", "en", doc)], "url string, lang string, text string")

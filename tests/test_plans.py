@@ -233,6 +233,10 @@ def test_new_gate_plans_have_no_cartesian(spark):
     # coalesced partition needs no exchange), so 0 is also a valid —
     # strictly better — shape
     assert tree.count("Exchange") - tree.count("BroadcastExchange") <= 1
+    # ... but only with the case-children aggregate still in the plan: a
+    # change that dropped the join would meet the exchange bound trivially
+    assert "Aggregate" in tree
+    assert "min(lower(lemma" in p
 
 
 def test_dedup_keep_rule_is_window_free(spark):
